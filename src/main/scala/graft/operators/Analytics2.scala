@@ -948,12 +948,13 @@ object Analytics2 {
         |ORDER BY node""".stripMargin) { (s, d) =>
       // checkpoint the edge derivation ONCE: the seed aggregate and the
       // BFS's own edge materialization otherwise each re-run the full
-      // lineitem → pair-explode → support pipeline (the e12 lesson)
-      val edges = Analytics.copurchaseEdges(s, d, minSupport = 2)
-        .localCheckpoint()
-      val seed = edges.agg(least(min(col("src")), min(col("dst"))).as("s"))
-        .head.getLong(0)
-      Graph.bfsHops(edges, seed, maxHops = 10)
+      // lineitem → pair-explode → support pipeline (the e12 lesson). The
+      // seed is observed by that checkpoint job; getLong throws on the
+      // null seed of an empty edge set instead of starting from node 0.
+      val (edges, seed) = Dedup.checkpointObserved(
+        Analytics.copurchaseEdges(s, d, minSupport = 2),
+        least(min(col("src")), min(col("dst"))))
+      Graph.bfsHops(edges, seed.getLong(0), maxHops = 10)
         .select(col("node"), col("hops").cast("long").as("hops"))
         .orderBy("node")
     },

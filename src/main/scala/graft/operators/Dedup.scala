@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Sketches, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.10):
@@ -1150,12 +1150,10 @@ object Dedup {
       // label the round's jobs (guide §1.5) — round counts are the CC
       // family's cost driver and this makes Profile attribution direct
       spark.sparkContext.setJobDescription(s"cc: round $round")
-      // ONE materialization per round (r15: was three jobs — neighborMin
-      // checkpoint, a convergence-probe join, the next-labels checkpoint;
-      // at probe scale the per-job fixed cost dominates, so the round is
-      // fused into a single checkpointed plan carrying a change flag):
-      // each node adopts min(own label, neighbors' labels), and `__chg`
-      // records whether anything improved. (Pointer-jumping hops — one
+      // ONE SQL execution per round, the checkpoint (per-job fixed cost
+      // dominates at probe scale): each node adopts min(own label,
+      // neighbors' labels), `__chg` records whether it improved, and the
+      // checkpoint job observes how many did. (Pointer-jumping hops — one
       // against the previous map, one squaring the fresh map in-plan —
       // were BOTH measured this round on s12's 16-round chainy graph:
       // rounds fell only to 13/11 while the extra node-sized join legs
@@ -1170,27 +1168,21 @@ object Dedup {
       // exactly once in `labels`, so min(tagged) recovers it). This
       // drops the per-round node-sided join entirely — with it the 1–2
       // driver-blocking broadcast-build jobs AQE planned for it each
-      // round (r16; measured on s12's 16-round graph: 117 → ~50 jobs
-      // with the agg probe below, wall 6.1 → 3.9 s in-session).
-      val next = labels.select(col("id"), col("label").as("l"),
-          lit(true).as("__s"))
-        .unionAll(edges
-          .join(labels.select(col("id").as("dst"), col("label").as("l")),
-            Seq("dst"))
-          .select(col("src").as("id"), col("l"), lit(false).as("__s")))
-        .groupBy("id")
-        .agg(min(col("l")).as("label"),
-          min(when(col("__s"), col("l"))).as("__old"))
-        .select(col("id"), col("label"),
-          (col("label") < col("__old")).as("__chg"))
-        .localCheckpoint()
-      // convergence probe over the just-materialized partitions: ONE
-      // scan-only agg job — the previous filter().limit(1).isEmpty paid
-      // Spark's executeTake ramp (1, 4, 16, … partitions = up to 4 jobs)
-      // on every CONVERGING round, and per-job fixed cost dominates at
-      // probe scale (r16)
-      converged = next.agg(count(when(col("__chg"), lit(1))))
-        .head.getLong(0) == 0L
+      // round (r16; measured on s12's 16-round graph: 117 → ~50 jobs,
+      // wall 6.1 → 3.9 s).
+      val (next, changed) = checkpointObserved(
+        labels.select(col("id"), col("label").as("l"), lit(true).as("__s"))
+          .unionAll(edges
+            .join(labels.select(col("id").as("dst"), col("label").as("l")),
+              Seq("dst"))
+            .select(col("src").as("id"), col("l"), lit(false).as("__s")))
+          .groupBy("id")
+          .agg(min(col("l")).as("label"),
+            min(when(col("__s"), col("l"))).as("__old"))
+          .select(col("id"), col("label"),
+            (col("label") < col("__old")).as("__chg")),
+        count(when(col("__chg"), lit(1))))
+      converged = changed.getLong(0) == 0L
       release(labels)
       labels = next.drop("__chg")
       round += 1
@@ -1225,6 +1217,21 @@ object Dedup {
         lr.rdd.unpersist(blocking = false)
       case _ =>
     }
+
+  /** `df.localCheckpoint()` plus aggregates over the rows it wrote, from
+    * the checkpoint's own job (`observe` is its plan's top operator, so
+    * each result task adds its partial once): a loop's convergence count
+    * or broadcast gate needs no second action. Read synchronously from the
+    * executed plan, not via an `Observation` the listener bus completes
+    * later. Use typed getters: `getLong` throws on null, where
+    * `asInstanceOf[Long]` would read 0.
+    */
+  def checkpointObserved(df: DataFrame, metric: Column, more: Column*)
+      : (DataFrame, Row) = {
+    val name = s"checkpoint-${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name, metric, more: _*)
+    (observed.localCheckpoint(), observed.queryExecution.observedMetrics(name))
+  }
 
   /** End-to-end near-dup clustering: verified MinHash pairs → connected
     * components → every document labeled with its cluster representative

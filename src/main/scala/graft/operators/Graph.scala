@@ -1,5 +1,6 @@
 package graft.operators
 
+import Dedup.checkpointObserved
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   *  - each round is `localCheckpoint`ed and the previous round's blocks
   *    are released ([[Dedup.release]]) — a cached chain keeps an
   *    O(3^rounds) logical plan that OOMs the driver (CLAUDE.md lesson);
-  *  - a FIXED iteration count, not a convergence test: determinism
-  *    across engines and no per-round driver action beyond the
-  *    checkpoint itself.
+  *  - no per-round Spark action beyond the checkpoint itself: a FIXED
+  *    round count (cross-engine determinism) or, in kCore and bfsHops, a
+  *    count observed by the round's checkpoint ([[Dedup.checkpointObserved]]).
   */
 object Graph {
 
@@ -64,9 +65,8 @@ object Graph {
     // nodes/outW are ROUND-INVARIANT: checkpoint them once so each
     // iteration's plan reads materialized partitions instead of
     // re-running the distinct/agg shuffles every round (r15)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val (nodes, nNodes) = checkpointObserved(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), count(lit(1)))
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       .localCheckpoint()
     // n-sized round inputs (ranks, outW, contrib) broadcast when the
@@ -76,7 +76,7 @@ object Graph {
     // the checkpointed sides have no stats, so the planner alone always
     // picks SMJ and AQE only downgrades after both exchanges ran).
     // Past the bound the shuffle join shape is kept (scale-correct).
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
+    val bcN = bcIf(nNodes.getLong(0) * 32 < BroadcastEntryBudget) _
     val nDf = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
     var ranks = nodes.join(nDf)
       .select(col("node"), (lit(1.0) / col("n")).as("r"))
@@ -128,13 +128,12 @@ object Graph {
         col("weight").cast("double").as("w"))
       .localCheckpoint()
     // round-invariant relations checkpointed once (the pageRank r15 note)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val (nodes, nNodes) = checkpointObserved(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), count(lit(1)))
     val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
       .localCheckpoint()
     // per-round broadcast gate: see pageRank (same shape, same bound)
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
+    val bcN = bcIf(nNodes.getLong(0) * 32 < BroadcastEntryBudget) _
     // teleport weight: one literal division of exact operands —
     // bit-identical to the oracle's 1.0::DOUBLE / |seeds|
     def p(node: org.apache.spark.sql.Column) =
@@ -200,11 +199,10 @@ object Graph {
         col("weight").cast("double").as("w"))
       .localCheckpoint()
     // round-invariant node set checkpointed once (the pageRank r15 note)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+    val (nodes, nNodes) = checkpointObserved(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), count(lit(1)))
     // per-round broadcast gate: see pageRank (same shape, same bound)
-    val bcN = bcIf(nodes.count() * 32 < BroadcastEntryBudget) _
+    val bcN = bcIf(nNodes.getLong(0) * 32 < BroadcastEntryBudget) _
     val nDf = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
     var hubs = nodes.join(nDf)
       .select(col("node"), (lit(1.0) / col("n")).as("h"))
@@ -299,19 +297,17 @@ object Graph {
     * Per-round cost is |frontier-adjacent edges|; total work is O(m)
     * across all rounds, rounds are bounded by the graph's diameter.
     * The d7/g1 iterative discipline: localCheckpoint per round, previous
-    * blocks released; the per-round emptiness check is a bounded
-    * frontier count (the convergence-test collect every iterative
-    * operator in this repo performs).
+    * blocks released; the frontier's size is observed by its checkpoint
+    * job, so the emptiness check costs no action of its own.
     */
   def bfsHops(edges: DataFrame, source: Long, maxHops: Int = 10)
       : DataFrame = {
     require(maxHops >= 1, "maxHops must be at least 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"))
+    val (e, nEdges) = checkpointObserved(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), count(lit(1)))
     // `visited` accumulates as a LAZY union of the checkpointed
     // frontiers (r15): each round checkpoints only its new frontier —
     // one job — instead of also re-materializing the whole visited set;
@@ -319,20 +315,18 @@ object Graph {
     // and the plan stays O(rounds), not O(rounds²)
     var visited = Seq((source, 0L)).toDF("node", "hops").localCheckpoint()
     // frontier/visited are bounded by the node count ≤ |e| (every node
-    // appears as a src of the symmetrized edge list) — gate on the edge
-    // count, which the checkpointed scan yields without a shuffle
-    val bcN = bcIf(e.count() * 32 < BroadcastEntryBudget) _
+    // is a src of the symmetrized edges): gate on e's observed count
+    val bcN = bcIf(nEdges.getLong(0) * 32 < BroadcastEntryBudget) _
     var frontier = visited
     var r = 1L
     var done = false
     while (r <= maxHops && !done) {
-      val next = e.join(bcN(frontier.select(col("node").as("src"))),
-          Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(bcN(visited), Seq("node"), "left_anti")
-        .withColumn("hops", lit(r))
-        .localCheckpoint()
-      if (next.isEmpty) {
+      val (next, nNext) = checkpointObserved(
+        e.join(bcN(frontier.select(col("node").as("src"))), Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(bcN(visited), Seq("node"), "left_anti")
+          .withColumn("hops", lit(r)), count(lit(1)))
+      if (nNext.getLong(0) == 0L) {
         Dedup.release(next)
         done = true
       } else {
@@ -369,17 +363,18 @@ object Graph {
     require(rounds >= 1, "rounds must be at least 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("w").cast("long").as("w")))
-      .groupBy("src", "dst").agg(min("w").as("w"))
-      .localCheckpoint()
-    require(e.filter(col("w") < 0).isEmpty, "negative edge weights")
+    val (e, stats) = checkpointObserved(
+      edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"),
+          col("w").cast("long").as("w")))
+        .groupBy("src", "dst").agg(min("w").as("w")),
+      min(col("w")), count(lit(1)))
+    require(stats.isNullAt(0) || stats.getLong(0) >= 0, "negative edge weights")
     var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
     // dist is bounded by the node count ≤ |e| (symmetrized edges): gate
-    // on the shuffle-free edge count so each relaxation round is a
+    // on the observed edge count so each relaxation round is a
     // map-side broadcast join over e's materialized partitions
-    val bcN = bcIf(e.count() * 32 < BroadcastEntryBudget) _
+    val bcN = bcIf(stats.getLong(1) * 32 < BroadcastEntryBudget) _
     var r = 0
     while (r < rounds) {
       val relaxed = e
@@ -442,13 +437,13 @@ object Graph {
       e.select(col("a").as("node"))
         .union(e.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("core_degree"))
-    var cur = edges.select(
+    val (cur0, n0) = checkpointObserved(edges.select(
         least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    var nEdges = cur.count()
+      .distinct(), count(lit(1)))
+    var cur = cur0
+    var nEdges = n0.getLong(0)
     var stable = false
     var rounds = 0
     while (!stable) {
@@ -460,15 +455,14 @@ object Graph {
       // map-side instead of being re-shuffled twice per peeling round
       val bcK = bcIf(nEdges * 64 < BroadcastEntryBudget) _
       val keep = degrees(cur).filter(col("core_degree") >= k).select("node")
-      val next = cur
+      val (next, nNext) = checkpointObserved(cur
         .join(bcK(keep.withColumnRenamed("node", "a")), Seq("a"), "left_semi")
-        .join(bcK(keep.withColumnRenamed("node", "b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val n = next.count()
+        .join(bcK(keep.withColumnRenamed("node", "b")), Seq("b"), "left_semi"),
+        count(lit(1)))
       Dedup.release(cur)
       cur = next
-      stable = n == nEdges
-      nEdges = n
+      stable = nNext.getLong(0) == nEdges
+      nEdges = nNext.getLong(0)
       rounds += 1
     }
     // materialize the (node-sized) result so the surviving edge set's
@@ -492,17 +486,17 @@ object Graph {
   def labelPropagation(edges: DataFrame, labels: DataFrame,
       rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be at least 1")
-    val ed = edges.select(col("src").as("node"), col("dst").as("nbr"))
-      .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
-      .filter(col("node").isNotNull && col("nbr").isNotNull &&
-        col("node") =!= col("nbr"))
-      .distinct()
-      .localCheckpoint()
+    val (ed, nEd) = checkpointObserved(
+      edges.select(col("src").as("node"), col("dst").as("nbr"))
+        .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
+        .filter(col("node").isNotNull && col("nbr").isNotNull &&
+          col("node") =!= col("nbr"))
+        .distinct(), count(lit(1)))
     var lab = labels.select(col("node"),
       col("label").cast("long").as("label")).localCheckpoint()
     // lab is node-bounded ≤ |ed|: broadcast it per round under the
     // budget so ed's materialized partitions are never re-shuffled
-    val bcN = bcIf(ed.count() * 32 < BroadcastEntryBudget) _
+    val bcN = bcIf(nEd.getLong(0) * 32 < BroadcastEntryBudget) _
     for (_ <- 1 to rounds) {
       val vote = ed
         .join(bcN(lab.select(col("node").as("nbr"), col("label").as("nl"))),
@@ -638,17 +632,16 @@ object Graph {
       .localCheckpoint()
     val lower = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    val oriented = und
+    // m (observed by the checkpoint job) is needed for the output anyway;
+    // it also drives the adjacency join strategy below
+    val (oriented, mRow) = checkpointObserved(und
       .join(deg.select(col("node").as("a"), col("d").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("d").as("db")), Seq("b"))
       .select(
         when(lower, col("a")).otherwise(col("b")).as("u"),
-        when(lower, col("b")).otherwise(col("a")).as("v"))
-      .localCheckpoint()
+        when(lower, col("b")).otherwise(col("a")).as("v")), count(lit(1)))
     Dedup.release(und)
-    // m is needed for the output anyway; it also drives the adjacency
-    // join strategy below (count over a checkpointed RDD — no recompute)
-    val m = oriented.count()
+    val m = mRow.getLong(0)
     // oriented out-adjacency: bounded at O(√m) entries per row by the
     // degree orientation, so collect_set can never build a celebrity row.
     // SORTED so the per-edge intersection is one allocation-free merge
